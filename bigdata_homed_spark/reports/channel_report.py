@@ -10,13 +10,17 @@ region→city→province re-aggregation (:266-273) → Phoenix.
 Here: the EPG is a deterministic synthetic program guide (2-hour programs
 per channel tiling the events time range), the interval join is the
 equi+range hash join from operators/enrich.py, ratings/topN/packing are
-single-pass window + collect_set, and the multi-grain pass is a rollup.
+single-pass window + collect_set, and the multi-grain pass is one
+GROUPING SETS aggregation.
 
 Scale: the EPG join broadcasts the guide (a real EPG is ~1e5 rows);
 the only fact shuffles are the per-program aggregation and the final
 channel grain — both keyed on (channel, program), high-cardinality even
 keys.  No driver-side loops anywhere (the reference's half-hour splitter
 and EPG map lookups were driver/closure-side).
+
+`channel_report_full` is one lazy plan with two fact-sized exchanges and
+nothing cached or checkpointed (see its section below).
 """
 
 from __future__ import annotations
@@ -133,19 +137,33 @@ def channel_report(spark: SparkSession, sf_dir: str, top_n: int = 3) -> DataFram
 # faithfully) with '-1' placeholders for collapsed columns (:349/:445).
 #
 # Deviations (deterministic refinements of unspecified reference behavior):
-# the packed rating string renders via decimal(20,8) (engine-identical) and
-# the collect_set pack is array_sort'ed before concat_ws (the reference's
-# set order is undefined).
+# the rating is exact integer arithmetic truncated at the 8th digit (see
+# `_rating_pack`) and the collect_set pack is array_sort'ed before
+# concat_ws (the reference's set order is undefined).
 #
-# Scale: every dim join is a broadcast; the fact shuffles are the three
-# per-grain aggs keyed on (terminal, geo, channel[, program, user]) — all
-# high-cardinality composites; coarser grains re-aggregate the ALREADY
-# REDUCED finer outputs (the reference's own trick), never the fact;
+# Shape: the reference's three copy-pasted grain branches become one
+# GROUPING SETS aggregation per family (Gray et al., "Data Cube", ICDE
+# 1996), and the report is a single lazy plan — no persist, no checkpoint.
+# Two fact-sized exchanges remain: per-program playtime (df_2, expanded to
+# all three grains straight from the base) and per-user playtime (the
+# input of df_0 and df_1).  Folding those two into one exchange at the
+# (geo, channel, program, user) grain moves more bytes: events do not
+# repeat a (user, program slot), so that grain barely reduces the fact
+# (OPTIMIZATION_r11.md).  Every dim join is a broadcast; the
 # day-count/report-date scalars ride a 1-row broadcast, no driver collect.
 
 _REG = ["f_terminal", "f_region_id", "f_city_id", "f_province_id"]
 _CH = ["f_channel_id"]
 _PROG = ["f_program_id"]
+_GRAINS = [_REG, ["f_terminal", "f_city_id", "f_province_id"], ["f_terminal", "f_province_id"]]
+
+
+def _by_grain(df: DataFrame, keys: list[str], *aggs: F.Column) -> DataFrame:
+    """Aggregate ``df`` per (grain, keys) for all three geo grains in one
+    GROUPING SETS pass; the geo ids a grain collapses read -1 (the
+    reference's placeholder), so later joins and windows key on _REG."""
+    out = df.groupingSets([g + keys for g in _GRAINS], *_REG, *keys).agg(*aggs)
+    return out.withColumns({c: F.coalesce(c, F.lit(-1)) for c in ("f_region_id", "f_city_id")})
 
 
 def build_channel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,10 +174,11 @@ def build_channel_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     f_channel_name = 'ch_'+id, program name/relevance/start_time all derive
     from f_program_id, city/province names are 25/5-row dim lookups), so
     this base carries only the 9 numeric columns.  Names are derived or
-    broadcast-joined AFTER aggregation (`_with_geo_names`) — at 100 TB that
-    keeps repeated strings out of every one of the report's nine shuffles
-    instead of hashing/sorting them billions of times.  Geo ids come from
-    the customer→nation dims (broadcast, tiny)."""
+    broadcast-joined AFTER aggregation (the final select of
+    `channel_report_full`) — at 100 TB that keeps repeated strings out of
+    both fact shuffles instead of hashing/sorting them billions of times.
+    Geo ids come from the customer→nation dims (broadcast, tiny) and are
+    never null or negative, so -1 is free to mark a collapsed grain."""
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_nationkey"
@@ -210,21 +229,16 @@ def _prog_name() -> F.Column:
     )
 
 
-def _tier_counts(per_user: DataFrame, keys: list[str]) -> DataFrame:
+def _tier_counts() -> list[F.Column]:
     """df_1: browse/hobby/steady user counts from per-user playtime/day
     (ChannelReport.scala:166-180)."""
     avg_sec = F.col("upt") / F.col("tg")
-    return per_user.groupBy(*keys).agg(
-        F.sum(F.when(avg_sec < 600, 1).otherwise(0)).cast("bigint").alias(
-            "f_browse_user_count"
-        ),
-        F.sum(F.when((avg_sec >= 600) & (avg_sec < 3600), 1).otherwise(0))
-        .cast("bigint")
-        .alias("f_hobby_user_count"),
-        F.sum(F.when(avg_sec >= 3600, 1).otherwise(0)).cast("bigint").alias(
-            "f_steady_user_count"
-        ),
-    )
+    tiers = {
+        "f_browse_user_count": avg_sec < 600,
+        "f_hobby_user_count": (avg_sec >= 600) & (avg_sec < 3600),
+        "f_steady_user_count": avg_sec >= 3600,
+    }
+    return [F.sum(F.when(t, 1).otherwise(0)).cast("bigint").alias(c) for c, t in tiers.items()]
 
 
 def _rating_pack(cat: DataFrame, keys: list[str], top_n: int) -> DataFrame:
@@ -285,14 +299,12 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
     """groupByCategory_NEW full column parity: f_date, terminal, 3-level
     geo ids+names, channel, packed rating array, packed user-type tiers —
     one row family per grain (region, city with region='-1', province with
-    region=city='-1'), ChannelReport.scala:122-454."""
-    from pyspark.storagelevel import StorageLevel
+    region=city='-1'), ChannelReport.scala:122-454.
 
-    # the base fans out to 3 aggregation families × 3 grains; persist it
-    # once like the reference (`base.persist(StorageLevel.DISK_ONLY)`,
-    # ChannelReport.scala:110) so the scan+parse+dim-join runs once — and
-    # narrow (9 numeric columns): names re-attach post-agg, see finalize
-    base = build_channel_base(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    One lazy plan: each aggregate family is a single GROUPING SETS
+    aggregation over the three geo grains, and everything after it —
+    rating window, pack, tier join, names — runs once over all grains."""
+    base = build_channel_base(spark, sf_dir)
     scal = F.broadcast(
         base.agg(
             F.countDistinct("f_date").alias("tg"),
@@ -300,82 +312,26 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
         )
     )
 
-    # ---- region grain (the fact-touching pass) -------------------------
-    # TWO fact shuffles, not three: the per-user frame df_1 needs anyway
-    # (region, channel, user → playtime) also answers df_0's region UV as
-    # a re-aggregation — countDistinct(user) over the reduced per-user
-    # rows is exactly the distinct-user count of the base (guide §2.3
-    # "aggregate before you shuffle").  Only df_2 (per-program playtime)
-    # still shuffles the base directly; each output feeds its own grain
-    # AND the city/province re-aggregations — cache them like the
-    # reference's df_[012]_region .cache() calls
-    # (ChannelReport.scala:165/181/212).
-    #
-    # Measured rejection (r11): collapsing these two into ONE exchange at
-    # the finer (geo, channel, program, user) grain was tried and REVERTED
-    # — on this corpus the fact barely reduces at that grain (sf1:
-    # 1 000 000 base rows -> 991 350, vs 149 860 at user grain / 581 346
-    # at program grain), so the single exchange moved ~0.99 fact + the
-    # 0.74-fact re-agg exchanges where the two-exchange shape moves
-    # ~0.73 fact in partials; job probe 52 -> 54 jobs, wall flat
-    # (7.44 -> 7.39 s min-of-3 at sf1).  Events here don't repeat a
-    # (user, program-slot), and users scale with data, so the grain never
-    # densifies at ANY SF — see OPTIMIZATION_r11.md.
-    pu = base.groupBy(*_REG, *_CH, "f_user_id").agg(
-        F.sum("f_play_sec").alias("upt")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    df0_r = pu.groupBy(*_REG).agg(
-        F.countDistinct("f_user_id").alias("f_uv")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    per_user_r = pu.crossJoin(scal)
-    df1_r = _tier_counts(per_user_r, _REG + _CH).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # df_2: per-program playtime is a plain sum, so every grain expands
+    # straight from the base (one Expand, partial agg, one exchange); a
+    # grouping of the region-grain sums would shuffle that grain twice
+    df2 = _by_grain(
+        base, _CH + _PROG, F.sum("f_play_sec").cast("bigint").alias("f_program_play_time")
     )
-    df2_r = base.groupBy(*_REG, *_CH, *_PROG).agg(
-        F.sum("f_play_sec").cast("bigint").alias("f_program_play_time")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cat_r = df0_r.join(df2_r, _REG).crossJoin(scal)
-    df3_r = _rating_pack(cat_r, _REG + _CH, top_n)
-    df4_r = df1_r.join(df3_r, _REG + _CH).crossJoin(scal)
-
-    # ---- city grain: RE-AGGREGATED from the region outputs -------------
-    city_k = ["f_terminal", "f_city_id", "f_province_id"]
-    df0_c = df0_r.groupBy(*city_k).agg(F.sum("f_uv").cast("bigint").alias("f_uv"))
-    df1_c = df1_r.groupBy(*city_k, *_CH).agg(
-        F.sum("f_browse_user_count").cast("bigint").alias("f_browse_user_count"),
-        F.sum("f_hobby_user_count").cast("bigint").alias("f_hobby_user_count"),
-        F.sum("f_steady_user_count").cast("bigint").alias("f_steady_user_count"),
+    # df_0/df_1 keep the reference's two-level sums over the per-user
+    # frame, the other fact exchange.  UV is a distinct count, so the
+    # coarse grains SUM the region-grain UV rows.  A tier count is a count
+    # of per-user rows, so grouping those rows per grain gives exactly the
+    # SUM of the region tier counts, without a region-grain pass in between
+    pu = base.groupBy(*_REG, *_CH, "f_user_id").agg(F.sum("f_play_sec").alias("upt"))
+    df0 = _by_grain(
+        pu.groupBy(*_REG).agg(F.countDistinct("f_user_id").alias("f_uv")),
+        [],
+        F.sum("f_uv").cast("bigint").alias("f_uv"),
     )
-    df2_c = df2_r.groupBy(*city_k, *_CH, *_PROG).agg(
-        F.sum("f_program_play_time").cast("bigint").alias("f_program_play_time")
-    )
-    cat_c = df0_c.join(df2_c, city_k).crossJoin(scal)
-    df3_c = _rating_pack(cat_c, city_k + _CH, top_n)
-    df4_c = df1_c.join(df3_c, city_k + _CH).crossJoin(scal)
-
-    # ---- province grain: re-aggregated again ---------------------------
-    prov_k = ["f_terminal", "f_province_id"]
-    df0_p = df0_r.groupBy(*prov_k).agg(F.sum("f_uv").cast("bigint").alias("f_uv"))
-    df1_p = df1_r.groupBy(*prov_k, *_CH).agg(
-        F.sum("f_browse_user_count").cast("bigint").alias("f_browse_user_count"),
-        F.sum("f_hobby_user_count").cast("bigint").alias("f_hobby_user_count"),
-        F.sum("f_steady_user_count").cast("bigint").alias("f_steady_user_count"),
-    )
-    df2_p = df2_r.groupBy(*prov_k, *_CH, *_PROG).agg(
-        F.sum("f_program_play_time").cast("bigint").alias("f_program_play_time")
-    )
-    cat_p = df0_p.join(df2_p, prov_k).crossJoin(scal)
-    df3_p = _rating_pack(cat_p, prov_k + _CH, top_n)
-    df4_p = df1_p.join(df3_p, prov_k + _CH).crossJoin(scal)
-
-    user_type = F.concat(
-        F.lit("1:"),
-        F.col("f_browse_user_count"),
-        F.lit(",2:"),
-        F.col("f_hobby_user_count"),
-        F.lit(",3:"),
-        F.col("f_steady_user_count"),
-    )
+    df1 = _by_grain(pu.crossJoin(scal), _CH, *_tier_counts())
+    df3 = _rating_pack(df2.join(df0, _REG).crossJoin(scal), _REG + _CH, top_n)
+    df4 = df1.join(df3, _REG + _CH).crossJoin(scal)
 
     # city/province display names are 25/5-row dim lookups — broadcast
     # joined onto the AGGREGATED rows (thousands), never onto the fact
@@ -391,47 +347,34 @@ def channel_report_full(spark: SparkSession, sf_dir: str, top_n: int = 3) -> Dat
             F.col("r_name").alias("f_province_name"),
         )
     )
-
-    def finalize(df: DataFrame, region: bool, city: bool) -> DataFrame:
-        df = df.join(reg_names, ["f_province_id"])
-        if city:
-            df = df.join(nat_names, ["f_city_id"])
-        return df.select(
+    return (
+        df4.join(reg_names, ["f_province_id"])
+        .join(nat_names, ["f_city_id"], "left")
+        .select(
             F.col("f_date_label").alias("f_date"),
             "f_terminal",
-            (F.col("f_region_id").cast("string") if region else F.lit("-1")).alias(
-                "f_region_id"
-            ),
-            (F.col("f_city_id").cast("string") if city else F.lit("-1")).alias(
-                "f_city_id"
-            ),
+            F.col("f_region_id").cast("string").alias("f_region_id"),
+            F.col("f_city_id").cast("string").alias("f_city_id"),
             F.col("f_province_id").cast("string").alias("f_province_id"),
-            (
-                F.concat(F.lit("rg_"), F.col("f_region_id").cast("string"))
-                if region
-                else F.lit("-1")
-            ).alias("f_region_name"),
-            (F.col("__city_name") if city else F.lit("-1")).alias("f_city_name"),
+            F.when(F.col("f_region_id") == -1, "-1")
+            .otherwise(F.concat(F.lit("rg_"), F.col("f_region_id").cast("string")))
+            .alias("f_region_name"),
+            F.when(F.col("f_city_id") == -1, "-1")
+            .otherwise(F.col("__city_name"))
+            .alias("f_city_name"),
             "f_province_name",
             F.col("f_channel_id").cast("string").alias("f_channel_id"),
             F.concat(F.lit("ch_"), F.col("f_channel_id").cast("string")).alias(
                 "f_channel_name"
             ),
             "f_rating_arr",
-            user_type.alias("f_user_type"),
+            F.concat(
+                F.lit("1:"),
+                F.col("f_browse_user_count"),
+                F.lit(",2:"),
+                F.col("f_hobby_user_count"),
+                F.lit(",3:"),
+                F.col("f_steady_user_count"),
+            ).alias("f_user_type"),
         )
-
-    out = (
-        finalize(df4_r, True, True)
-        .unionAll(finalize(df4_c, False, True))
-        .unionAll(finalize(df4_p, False, False))
     )
-    # materialize the (small) result now, then release the four caches —
-    # otherwise every invocation pins base+3 aggregates for the session's
-    # lifetime (the reference unpersists its df_* caches the same way,
-    # ChannelReport.scala:362/368/402); localCheckpoint keeps only the
-    # final rows resident
-    out = out.localCheckpoint(eager=True)
-    for df in (base, pu, df0_r, df1_r, df2_r):
-        df.unpersist()
-    return out

@@ -8,9 +8,10 @@ lakehouse answer (Delta/Iceberg/Hudi) pins every read to a MANIFEST — a
 small JSON file naming the version's exact data-file set — so:
 
 - **atomic commit**: data files land first (immutable, uniquely named);
-  the commit point is one ``os.replace`` of the manifest — readers see the
-  old version or the new one, never a torn mix.  A crash before the rename
-  leaves orphan data files but a fully consistent table.
+  the commit point is one ``os.link`` of the manifest — readers see the
+  old version or the new one, never a torn mix, and a concurrent writer
+  for the same version loses with ``CommitConflictError``.  A crash
+  before the link leaves orphan data files but a fully consistent table.
 - **time travel**: old manifests are never touched; ``read(version=N)``
   reconstructs any committed state exactly.
 - **safe compaction**: ``commit_rewrite`` publishes the same rows as new
@@ -87,7 +88,7 @@ class SnapshotTable:
 
         <path>/data/<uuid>.parquet        immutable data files
         <path>/_manifests/v<N>.json       {"version": N, "files": [...]}
-        <path>/_manifests/v<N>.json.tmp   staged then os.replace'd (atomic)
+        <path>/_manifests/v<N>.json.<uuid>.tmp   staged, then linked to v<N>.json
     """
 
     # every Nth version stores the FULL file list (a checkpoint); versions
@@ -509,10 +510,20 @@ class SnapshotTable:
         else:
             manifest["files"] = entries
         final = os.path.join(self.manifest_dir, f"v{v}.json")
-        tmp = final + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, final)  # THE commit point
+        # a writer-private temp name, committed by link: link refuses an
+        # existing target, so of two writers that both passed the head
+        # check for v{v} exactly one commits (a replace would silently
+        # overwrite the other's manifest)
+        tmp = f"{final}.{uuid.uuid4().hex}.tmp"
+        try:
+            with open(tmp, "w") as f:
+                json.dump(manifest, f)
+            os.link(tmp, final)  # THE commit point
+        except FileExistsError:
+            raise CommitConflictError(f"v{v} was committed by another writer") from None
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
         resolved = {k: val for k, val in manifest.items() if k not in ("adds", "removes")}
         resolved["files"] = entries
         self._manifest_cache[v] = resolved

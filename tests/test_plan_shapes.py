@@ -27,6 +27,16 @@ def formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+def next_job_id(spark) -> int:
+    """Id the next Spark job will get.  Job-count ceilings difference two
+    of these: a count of retained jobs stops growing once the status store
+    evicts old jobs (``spark.ui.retainedJobs``), so late in a long session
+    it would difference to ~0 and pass any ceiling."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job-start events arrive asynchronously
+    return max(list(sc.statusTracker().getJobIdsForGroup(None)), default=-1) + 1
+
+
 def window_partition_specs(plan: str) -> list[str]:
     """Partition spec of every Window physical node in a plan string.
 
@@ -618,18 +628,17 @@ def test_merge_commit_job_count_ceiling(spark, tmp_path):
     re-adds whole jobs, which this ceiling catches deterministically."""
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
-    tr = spark.sparkContext._jsc.sc().statusTracker()
     t = SnapshotTable(str(tmp_path / "jc_merge"))
     t.commit_append(
         spark.range(0, 1000).selectExpr("id as k", "id*2 as v"), stats_cols=["k"]
     )
-    before = len(tr.getJobIdsForGroup(None))
+    before = next_job_id(spark)
     t.commit_merge(
         spark.range(100, 200).selectExpr("id as k", "id*7 as v"),
         key="k",
         stats_cols=["k"],
     )
-    assert len(tr.getJobIdsForGroup(None)) - before <= 10
+    assert next_job_id(spark) - before <= 10
 
 
 def test_merge_latest_job_count_ceiling(spark, tmp_path):
@@ -643,7 +652,6 @@ def test_merge_latest_job_count_ceiling(spark, tmp_path):
 
     from bigdata_homed_spark.sources.sinks import PartitionedStateStore
 
-    tr = spark.sparkContext._jsc.sc().statusTracker()
     store = PartitionedStateStore(
         tempfile.mkdtemp(prefix="jc_state_", dir=str(tmp_path)), ["k"], n_buckets=8
     )
@@ -652,7 +660,22 @@ def test_merge_latest_job_count_ceiling(spark, tmp_path):
         upd = spark.range(b * 100, b * 100 + 300).selectExpr(
             "id % 400 as k", "id as sec", "id*2 as v"
         )
-        before = len(tr.getJobIdsForGroup(None))
+        before = next_job_id(spark)
         store.merge_latest(upd, ["sec"])
-        counts.append(len(tr.getJobIdsForGroup(None)) - before)
+        counts.append(next_job_id(spark) - before)
     assert max(counts) <= 6, counts
+
+
+def test_channel_report_full_job_count_ceiling(spark, sf_dir):
+    """Pin ChannelReport as one lazy GROUPING SETS plan: <= 24 jobs per
+    collect().  The per-grain branch shape with eager persists and a
+    checkpoint ran 51; a persist, a checkpoint or a per-grain branch that
+    comes back re-adds whole jobs."""
+    from bigdata_homed_spark.plans import QUERIES
+
+    counts = []
+    for _ in range(2):  # the first collect also pays one-off planning jobs
+        before = next_job_id(spark)
+        QUERIES["channel_report_full"](spark, sf_dir).collect()
+        counts.append(next_job_id(spark) - before)
+    assert counts[-1] <= 24, counts

@@ -3,9 +3,15 @@ non-degenerate frame; oracle coverage is near-total; entry() works."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 
 from bigdata_homed_spark.plans import ORACLES, QUERIES
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+import check_correctness  # noqa: E402 - the oracle gate's comparison
 
 # queries whose legitimate sf0.001 result can be empty (small-sample effects)
 MAY_BE_EMPTY = {"embedding_ann_pairs", "ngram_jaccard_pairs", "minhash_lsh_pairs"}
@@ -28,6 +34,31 @@ ROWS_ONLY = {
     "value_percentiles_approx",
     "label_top_direction",
 }
+
+
+# the ops of the benchmark's homed_reports workload
+HOMED_REPORTS = ["channel_report_full", "video_play_report", "gap_sessions", "halfhour_activity"]
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = check_correctness.duck_catalog(sf_dir)
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", HOMED_REPORTS)
+def test_homed_report_matches_oracle(spark, sf_dir, duck, name):
+    """Full-result parity with the DuckDB oracle, compared the way the
+    oracle gate compares: column names, row count, order-insensitive
+    value hash."""
+    df = QUERIES[name](spark, sf_dir)
+    rows = [tuple(r) for r in df.collect()]
+    res = duck.sql(ORACLES[name])
+    problems = check_correctness.compare(
+        df.columns, rows, [d[0] for d in res.description], res.fetchall()
+    )
+    assert not problems, problems
 
 
 def test_oracle_coverage():

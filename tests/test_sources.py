@@ -959,6 +959,49 @@ def test_snapshot_commit_conflict_detection(spark, tmp_path):
         assert json.load(f)["version"] == 1
 
 
+def test_snapshot_publish_race_has_one_winner(tmp_path):
+    """Two writers prepared against the same parent race for v1: in every
+    trial exactly one commits and the other gets CommitConflictError.  A
+    shared temp name plus a replace let both report "committed v1" (one
+    update silently lost), or crash when one writer's replace consumed the
+    other's temp file."""
+    import os
+    import threading
+
+    from bigdata_homed_spark.sources.snapshots import (
+        CommitConflictError,
+        SnapshotTable,
+    )
+
+    for trial in range(200):
+        path = str(tmp_path / f"race{trial}")
+        writers = [SnapshotTable(path), SnapshotTable(path)]
+        start = threading.Barrier(2)
+        won, lost, errors = [], [], []
+
+        def write(i):
+            start.wait()
+            try:
+                v = writers[i]._publish([{"path": f"w{i}.parquet"}], expected_parent=0)
+                won.append((i, v))
+            except CommitConflictError:
+                lost.append(i)
+            except Exception as e:  # noqa: BLE001 - any other outcome fails below
+                errors.append(repr(e))
+
+        threads = [threading.Thread(target=write, args=(i,)) for i in range(2)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+        assert not errors, (trial, errors)
+        assert len(won) == 1 and len(lost) == 1, (trial, won, lost)
+        winner, v = won[0]
+        assert v == 1
+        assert SnapshotTable(path).files(1) == [f"w{winner}.parquet"]
+        assert os.listdir(writers[0].manifest_dir) == ["v1.json"]
+
+
 def test_snapshot_incremental_read_append_only_contract(spark, tmp_path):
     """incremental_files returns exactly the files added after the
     checkpoint version; a rewrite inside the range breaks the append-only

@@ -2,7 +2,7 @@
 Spark and its oracle_sql() on DuckDB at a given SF, compare row count,
 column names, and an order-insensitive value hash.
 
-Usage: python tools/check_correctness.py [sf_dir] [query ...]
+Usage: python tools/check_correctness.py sf_dir [query ...]
 """
 
 from __future__ import annotations
@@ -18,9 +18,6 @@ sys.path.insert(0, "/root/repo")
 import duckdb
 
 from bigdata_homed_spark.session import get_spark
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
 
 
 def canon(v):
@@ -39,36 +36,71 @@ def canon(v):
     return str(v)
 
 
-def table_hash(cols: list[str], rows: list[tuple]) -> str:
+def canon_lines(cols: list[str], rows: list[tuple]) -> list[str]:
+    """Rows rendered with columns in name order, sorted: the result as a
+    set, independent of column and row order."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(canon(r[i]) for i in order) for r in rows)
+    return sorted("|".join(canon(r[i]) for i in order) for r in rows)
+
+
+def table_hash(cols: list[str], rows: list[tuple]) -> str:
     h = hashlib.sha256()
-    for line in lines:
+    for line in canon_lines(cols, rows):
         h.update(line.encode())
         h.update(b"\n")
     return h.hexdigest()[:16]
 
 
-def main() -> int:
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    spark = get_spark("check_correctness")
-
+def duck_catalog(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per catalog table of ``sf_dir``."""
     con = duckdb.connect()
     for t in (
         "region nation customer supplier part orders lineitem events documents embeddings"
     ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(scols: list[str], srows: list[tuple], dcols: list[str], drows: list[tuple]) -> list[str]:
+    """Differences between a Spark result and its oracle's: column names,
+    row count, then the order-insensitive value hash (empty when equal)."""
+    problems = []
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
+    if len(srows) != len(drows):
+        problems.append(f"rows spark={len(srows)} duck={len(drows)}")
+    if not problems:
+        sh = table_hash(scols, srows)
+        dh = table_hash(dcols, drows)
+        if sh != dh:
+            problems.append(f"hash spark={sh} duck={dh}")
+            # show a diff sample
+            for a, b in zip(canon_lines(scols, srows), canon_lines(dcols, drows)):
+                if a != b:
+                    problems.append(f"  first diff:\n  spark: {a}\n  duck : {b}")
+                    break
+    return problems
+
+
+def main() -> int:
+    import __spark_entry__ as entrymod
+
+    if len(sys.argv) < 2:
+        print(__doc__)
+        return 2
+    sf_dir, only = sys.argv[1], set(sys.argv[2:])
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    spark = get_spark("check_correctness")
+    con = duck_catalog(sf_dir)
 
     failures = 0
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception:
@@ -93,29 +125,7 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error\n{traceback.format_exc()}")
             failures += 1
             continue
-        problems = []
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-        if len(srows) != len(drows):
-            problems.append(f"rows spark={len(srows)} duck={len(drows)}")
-        if not problems:
-            sh = table_hash(scols, srows)
-            dh = table_hash(dcols, drows)
-            if sh != dh:
-                problems.append(f"hash spark={sh} duck={dh}")
-                # show a diff sample
-                so = sorted(
-                    "|".join(canon(r[i]) for i in sorted(range(len(scols)), key=lambda i: scols[i]))
-                    for r in srows
-                )
-                do = sorted(
-                    "|".join(canon(r[i]) for i in sorted(range(len(dcols)), key=lambda i: dcols[i]))
-                    for r in drows
-                )
-                for a, b in zip(so, do):
-                    if a != b:
-                        problems.append(f"  first diff:\n  spark: {a}\n  duck : {b}")
-                        break
+        problems = compare(scols, srows, dcols, drows)
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             failures += 1
