@@ -229,13 +229,11 @@ def pack_group_array(
     group_cols: Sequence[str],
     item_expr: Column,
     out_col: str = "items",
-    sort: bool = True,
 ) -> DataFrame:
     """A4: collect the group's items into a deterministic (sorted) array —
     the reference packs '&'-joined strings with collect_set
     (`etl/RunLogParser.scala:337-345`, `ChannelReport.scala:227`); we sort
     so goldens are stable."""
-    arr = F.collect_set(item_expr)
-    if sort:
-        arr = F.sort_array(arr)
-    return df.groupBy(*group_cols).agg(arr.alias(out_col))
+    return df.groupBy(*group_cols).agg(
+        F.sort_array(F.collect_set(item_expr)).alias(out_col)
+    )

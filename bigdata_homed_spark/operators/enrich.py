@@ -30,7 +30,6 @@ def dim_join(
     dim: DataFrame,
     on: Sequence[str] | Column,
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """J1/J2: fact ⋈ dimension with a broadcast hint.
 
@@ -38,8 +37,7 @@ def dim_join(
     HashMap lookups (J7) — one declarative join, Catalyst emits
     BroadcastHashJoin, fact side is never shuffled.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on, how)
+    return fact.join(F.broadcast(dim), on, how)
 
 
 def interval_join(

@@ -20,9 +20,10 @@ ranking order, not stochastic-matrix purity, is the product.
 Scale shape (the Pregel-on-DataFrame loop):
 - edges carry their source's total strength, attached ONCE before the loop
   and localCheckpointed — the loop never recomputes it;
-- each iteration is one equi-join (ranks ⋈ edges on src) + one shuffle on
-  dst for the contribution sum — O(E) work per round, no broadcast of
-  anything sized O(V);
+- the vertex set is dimension-sized (parts, hosts, channels), so the
+  V-row strength and rank frames are broadcast: each iteration is a
+  map-side hash join over the never re-shuffled edge list plus one
+  V-sized shuffle on dst for the contribution sum — no edge shuffle;
 - iteration count is FIXED (caller-chosen), not convergence-tested: a
   deterministic output needs a deterministic round count, and fixed-k
   power iteration is how production systems bound the cost anyway.  A
@@ -33,9 +34,9 @@ Scale shape (the Pregel-on-DataFrame loop):
   — shuffles chain stage-to-stage, nothing is re-materialized per round.
   Ranks are localCheckpointed only every ``checkpoint_every`` rounds to
   bound plan depth for large k.
-At 100 TB the same loop runs unchanged: both joins shuffle on the node id,
-so co-partitioning carries between rounds under AQE; per-round cost is
-linear in edges.
+The edge list may grow to any size; only the vertex set must fit in a
+broadcast (tens of MB for millions of nodes).  Per-round cost is linear
+in edges.
 """
 
 from __future__ import annotations
@@ -56,7 +57,6 @@ def pagerank_ranks(
     edges: DataFrame,
     iterations: int = 8,
     checkpoint_every: int = 4,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """Weighted PageRank over a DIRECTED edge list ``(src, dst, w)``.
 
@@ -73,14 +73,11 @@ def pagerank_ranks(
         out_share(u→v)  = (pr_u * w_uv) div strength_u      (exact bigint)
         pr'_v           = PR_TELEPORT + (85 * Σ in_shares) div 100
 
-    ``broadcast_ranks=True`` is the dimension-sized-V mode: when the
-    vertex set is a dim (parts, hosts, channels — millions of rows, tens
-    of MB), broadcasting the rank vector turns every round into a
-    map-side hash join over the (big, checkpointed, never re-shuffled)
-    edge list plus one V-sized aggregation — no per-round sort or
-    edge-shuffle at all.  The default (False) is the huge-V mode: a keyed
-    shuffle join, O(E) per round, for graphs whose vertex set itself is
-    data-sized (e.g. per-document graphs).  Same math, same result.
+    The vertex set must be dimension-sized (parts, hosts, channels —
+    millions of rows, tens of MB): the rank vector is broadcast, so every
+    round is a map-side hash join over the (big, checkpointed, never
+    re-shuffled) edge list plus one V-sized aggregation — no per-round
+    sort or edge-shuffle at all.
     """
     # the edge list feeds BOTH the strength aggregate and the join below;
     # without the persist the caller's whole edge-build subtree (pair
@@ -89,14 +86,15 @@ def pagerank_ranks(
     edges = edges.persist()
     strength = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("s"))
     # attach strength once; the loop re-reads this checkpoint every round.
-    # In dim-sized-V mode the strength frame is V-sized by the same
-    # argument as the rank broadcast — force the broadcast so the E-sized
-    # edge list is never shuffled for this join (post-aggregation size
-    # estimates are unreliable, guide §3.1; measured 3.0 → 2.3 s warm on
-    # the sf0.1 co-purchase build)
-    s_side = F.broadcast(strength) if broadcast_ranks else strength
+    # The strength frame is V-sized by the same argument as the rank
+    # broadcast — force the broadcast so the E-sized edge list is never
+    # shuffled for this join (post-aggregation size estimates are
+    # unreliable, guide §3.1; measured 3.0 → 2.3 s warm on the sf0.1
+    # co-purchase build)
     edges_s = (
-        edges.join(s_side, "src").select("src", "dst", "w", "s").localCheckpoint()
+        edges.join(F.broadcast(strength), "src")
+        .select("src", "dst", "w", "s")
+        .localCheckpoint()
     )
     edges.unpersist()
     # initial ranks come from the CHECKPOINTED frame (distinct src ==
@@ -106,7 +104,7 @@ def pagerank_ranks(
         "node", F.lit(PR_SCALE).cast("bigint").alias("pr")
     )
     for i in range(iterations):
-        rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
+        rank_side = F.broadcast(ranks)
         ranks = (
             edges_s.join(rank_side, edges_s["src"] == rank_side["node"])
             .select(F.col("dst"), F.expr("(pr * w) div s").alias("share"))
@@ -174,41 +172,35 @@ def pagerank_oracle_ctes(
 # spread a small set of trusted labels (curated domains, human-rated docs)
 # over a similarity/co-occurrence graph to label the long tail.
 #
-# Scale shape: per round one equi-join (labels ⋈ edges on src, both keyed
-# by node id) + one (node, label) aggregate + one node-keyed window over
-# the vote frame — O(E·deg(labels)) work, no O(V) broadcast, same Pregel-
-# on-DataFrame shape as pagerank_ranks.  Fixed round count for the same
+# Scale shape: per round one broadcast hash join (V-sized labels ⋈ edges
+# on src) + one (node, label) aggregate + one node-keyed window over the
+# vote frame — O(E·deg(labels)) work, no edge shuffle, same Pregel-on-
+# DataFrame shape as pagerank_ranks.  Fixed round count for the same
 # reason as PageRank: deterministic output needs a deterministic loop.
 
 
 def label_propagation(
-    edges: DataFrame, seeds: DataFrame, rounds: int = 3,
-    dim_sized_v: bool = False,
+    edges: DataFrame, seeds: DataFrame, rounds: int = 3
 ) -> DataFrame:
     """``edges``: (src, dst, w) DIRECTED (pass both directions for an
     undirected graph); ``seeds``: (node, label).  Returns (node, label,
     is_seed, vote) for every node labeled after ``rounds`` rounds — vote
     is the winning integer weight sum (NULL for seeds).
 
-    ``dim_sized_v=True`` is the pagerank ``broadcast_ranks`` analog: when
-    the vertex set is a dim (parts, hosts, channels), the per-round label
-    frame is V-sized, so broadcasting it turns every round's edges ⋈
-    labels into a map-side hash join over the (big, never re-shuffled)
-    edge list — no per-round O(E) exchange (guide §3.1).  The seed
-    anti-join is V-sized on BOTH sides and rides the same broadcast.
-    Default False is the huge-V mode: keyed shuffle joins, for graphs
-    whose vertex set itself is data-sized.  Same math, same result."""
+    The vertex set must be dimension-sized, as for ``pagerank_ranks``:
+    each round broadcasts the V-sized label frame (no O(E) exchange,
+    guide §3.1), and the V-sized seed anti-join rides the same broadcast."""
     from pyspark.sql import Window
 
     edges = edges.localCheckpoint(eager=False)
     seeds = seeds.localCheckpoint(eager=False)
     seed_nodes = seeds.select("node")
-    anti_side = F.broadcast(seed_nodes) if dim_sized_v else seed_nodes
+    anti_side = F.broadcast(seed_nodes)
     w = Window.partitionBy("node").orderBy(F.desc("vote"), F.asc("label"))
     labels = seeds
     winners = None
     for _ in range(rounds):
-        label_side = F.broadcast(labels) if dim_sized_v else labels
+        label_side = F.broadcast(labels)
         votes = (
             edges.join(label_side, edges["src"] == label_side["node"])
             .groupBy(F.col("dst").alias("node"), "label")
@@ -297,24 +289,22 @@ def trustrank_ranks(
     seeds: DataFrame,
     iterations: int = 4,
     checkpoint_every: int = 4,
-    dim_sized_v: bool = False,
 ) -> DataFrame:
     """``edges``: (src, dst, w) directed (symmetrize for undirected);
     ``seeds``: (node,).  Returns (node, trust) for nodes with trust > 0
     after ``iterations`` rounds.
 
-    ``dim_sized_v=True`` is the pagerank_ranks ``broadcast_ranks`` analog
-    for the strength attachment: when the vertex set is dimension-sized,
-    broadcasting the V-row strength frame keeps the E-sized edge list
-    un-shuffled through this join (guide §3.1 — post-agg size estimates
-    are unreliable, so the hint is explicit)."""
+    The vertex set must be dimension-sized, as for ``pagerank_ranks``:
+    the V-row strength frame is broadcast (guide §3.1 — post-agg size
+    estimates are unreliable, so the hint is explicit)."""
     # same dedup as pagerank_ranks: the edge subtree feeds strength AND
     # the join — persist across the checkpoint build
     edges = edges.persist()
     strength = edges.groupBy("src").agg(F.sum("w").cast("bigint").alias("s"))
-    s_side = F.broadcast(strength) if dim_sized_v else strength
     edges_s = (
-        edges.join(s_side, "src").select("src", "dst", "w", "s").localCheckpoint()
+        edges.join(F.broadcast(strength), "src")
+        .select("src", "dst", "w", "s")
+        .localCheckpoint()
     )
     edges.unpersist()
     seed_tp = seeds.select(

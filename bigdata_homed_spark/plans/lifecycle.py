@@ -179,7 +179,7 @@ def daily_user_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.aggregate import pack_group_array
 
     ev = events_sec(spark, sf_dir).withColumn("day_num", F.expr("sec div 86400"))
-    packed = pack_group_array(ev, ["day_num"], F.col("user_id"), out_col="users", sort=True)
+    packed = pack_group_array(ev, ["day_num"], F.col("user_id"), out_col="users")
     return packed.select(
         "day_num",
         F.concat_ws(",", F.col("users")).alias("user_array"),

@@ -420,7 +420,9 @@ def _run_keyed_upsert_stream(
     (sec, event_id) — so an out-of-order or replayed batch can never
     overwrite newer state with older events.  The retention cutoff uses a
     driver-held running max of event time, so it is genuinely monotonic
-    rather than batch-local.  Per-batch I/O stays O(batch ∪ touched
+    rather than batch-local; as in ``stream_channel_live_counts`` it rides
+    merge_latest's ``horizon_col`` collect and fused filter, with one
+    ``expire()`` after the drain.  Per-batch I/O stays O(batch ∪ touched
     buckets) throughout."""
     import tempfile
 
@@ -433,14 +435,20 @@ def _run_keyed_upsert_stream(
     )
     hi = {"max_sec": None}
 
+    def horizon_pred(mx):
+        if mx is not None:
+            hi["max_sec"] = max(hi["max_sec"] or int(mx), int(mx))
+        if hi["max_sec"] is None:
+            return None
+        return f"sec < {hi['max_sec'] - retention_sec}"
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sparkb = batch_df.sparkSession
-        store.merge_latest(batch_df, ["sec", "event_id"])
-        row = batch_df.agg(F.max("sec").alias("mx")).collect()[0]
-        if row.mx is not None:
-            hi["max_sec"] = max(hi["max_sec"] or int(row.mx), int(row.mx))
-            if retention_sec is not None:
-                store.expire(sparkb, f"sec < {hi['max_sec'] - retention_sec}")
+        store.merge_latest(
+            batch_df,
+            ["sec", "event_id"],
+            horizon_col=None if retention_sec is None else "sec",
+            horizon_to_predicate=horizon_pred,
+        )
 
     events = read_events_stream(spark, sf_dir).select(
         "user_id", "event_id", "event_type", "value", F.col("ts_sec").alias("sec")
@@ -452,6 +460,9 @@ def _run_keyed_upsert_stream(
         .start()
     )
     q.awaitTermination()
+    # final retention sweep over the buckets the fused filter never saw
+    if hi["max_sec"] is not None:
+        store.expire(spark, f"sec < {hi['max_sec'] - retention_sec}")
     return store.read(spark)
 
 
@@ -555,8 +566,8 @@ def stream_foreachbatch_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S13/T8 retention driven end-to-end: the `stream_foreachbatch_latest`
     keyed-upsert pipeline PLUS the reference's per-batch retention DELETE
     (`homed/realtime/ChannelLive.scala:579-625` deletes rows older than the
-    retention horizon every cycle) — here `PartitionedStateStore.expire`,
-    which rewrites only the buckets containing expired rows.  The cutoff
+    retention horizon every cycle) — here fused into merge_latest's per-batch
+    bucket rewrite plus one `expire()` after the drain.  The cutoff
     is a RUNNING max of seen event time minus 1 day (the reference's
     realtime tables kept exactly 1 day, BASELINE.md) — held by the driver
     so it is monotonic even when batches arrive out of event-time order —

@@ -12,6 +12,10 @@ exact semantics of the reference's per-day overwrite, without clobbering
 other days), and the JDBC sink is a thin gated wrapper (no database in the
 test container).  Upsert-by-PK is emulated with an anti-join + union
 (MERGE without Delta), usable from ``foreachBatch`` for streaming parity.
+
+Small-file compaction belongs to ``SnapshotTable`` (``sources/snapshots.py``:
+``commit_compact_small``/``maybe_compact``), which publishes it in one
+atomic manifest commit instead of swapping directories under readers.
 """
 
 from __future__ import annotations
@@ -43,12 +47,6 @@ def write_partitioned_fact(
     if output_files_per_partition:
         out = df.repartition(output_files_per_partition, *partition_cols)
     out.write.mode(mode).partitionBy(*partition_cols).format(fmt).save(path)
-
-
-def read_partitioned_fact(spark: SparkSession, path: str) -> DataFrame:
-    """Partition-discovering scan; filters on the partition column prune
-    directories before any I/O (verified in tests via the physical plan)."""
-    return spark.read.parquet(path)
 
 
 def upsert_by_key(
@@ -187,25 +185,12 @@ class PartitionedStateStore:
         self,
         updates: DataFrame,
         order_cols: Sequence[str],
-        expire_predicate=None,
         horizon_col: str | None = None,
         horizon_to_predicate=None,
     ) -> list[int]:
         """One-pass newest-wins merge (S10 + T3 fused): union the batch
         with the touched buckets' existing rows and keep, per key, the row
         with the greatest ``order_cols`` tuple.
-
-        ``expire_predicate`` (SQL string or Column, same NULL-safe contract
-        as :meth:`expire`) fuses the retention DELETE into the merge's
-        bucket rewrite: winners matching it are dropped from the touched
-        buckets in the SAME write, instead of a separate expire() pass
-        re-reading and re-writing the state per batch.  Buckets the batch
-        does not touch keep their expired rows until the caller's final
-        sweep — with a monotone horizon the converged state is identical
-        (an intermediate-expired row is final-expired too, and keep-latest
-        is idempotent), while per-batch job count drops from ~7 to ~4;
-        in a micro-batch loop job count, not data volume, bounds
-        throughput at every scale.
 
         Equivalent to ``read_for_keys`` + keep-latest + ``upsert`` — the
         shape the keyed streaming jobs used through r6 — but reads the
@@ -219,23 +204,25 @@ class PartitionedStateStore:
         never regress the snapshot (same argument as the unfused path).
         ``updates`` may contain several rows per key; exactly one survives.
 
-        ``horizon_col`` + ``horizon_to_predicate`` fold the caller's
-        event-time-horizon aggregation into the touched-bucket collect:
-        the bounded per-bucket collect additionally carries
-        ``max(horizon_col)`` (same job, same ≤ n_buckets rows), the global
-        max is handed to ``horizon_to_predicate(batch_max_or_None)``, and
-        whatever predicate it returns (or None) is applied exactly like
-        ``expire_predicate``.  This removes the separate driver job per
-        micro-batch that a caller-side ``agg(max(...)).collect()`` costs —
-        the callback owns the monotone-horizon state, so replay safety is
-        unchanged (max is idempotent).  Mutually exclusive with
-        ``expire_predicate``.
+        ``horizon_col`` + ``horizon_to_predicate`` fuse the retention
+        DELETE into the merge.  The bounded per-bucket collect additionally
+        carries ``max(horizon_col)`` (same job, same ≤ n_buckets rows), the
+        global max is handed to ``horizon_to_predicate(batch_max_or_None)``,
+        and the predicate it returns (SQL string or Column, same NULL-safe
+        contract as :meth:`expire`; or None) drops matching winners from
+        the touched buckets in the SAME write, instead of a separate
+        expire() pass re-reading and re-writing the state per batch, and
+        instead of the separate driver job per micro-batch that a
+        caller-side ``agg(max(...)).collect()`` costs.  The callback owns
+        the monotone-horizon state, so replay safety is unchanged (max is
+        idempotent).  Buckets the batch does not touch keep their expired
+        rows until the caller's final ``expire()`` sweep — with a monotone
+        horizon the converged state is identical (an intermediate-expired
+        row is final-expired too, and keep-latest is idempotent).
         """
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        if expire_predicate is not None and horizon_col is not None:
-            raise ValueError("pass expire_predicate OR horizon_col, not both")
         spark = updates.sparkSession
         # lazy persist instead of an eager localCheckpoint: the
         # touched-bucket collect below is the first action anyway, so the
@@ -244,6 +231,7 @@ class PartitionedStateStore:
         try:
             # bounded metadata collect: ≤ n_buckets rows (the pruning
             # predicate, plus the per-bucket horizon max when requested)
+            pred = None
             if horizon_col is not None:
                 stats = (
                     upd.groupBy(self.BUCKET_COL)
@@ -252,7 +240,7 @@ class PartitionedStateStore:
                 )
                 touched = [r[0] for r in stats]
                 hmaxes = [r["__hmax"] for r in stats if r["__hmax"] is not None]
-                expire_predicate = horizon_to_predicate(
+                pred = horizon_to_predicate(
                     max(hmaxes) if hmaxes else None
                 )
             else:
@@ -274,12 +262,9 @@ class PartitionedStateStore:
                 .where(F.col("__rn") == 1)
                 .drop("__rn")
             )
-            if expire_predicate is not None:
-                pred = (
-                    F.expr(expire_predicate)
-                    if isinstance(expire_predicate, str)
-                    else expire_predicate
-                )
+            if pred is not None:
+                if isinstance(pred, str):
+                    pred = F.expr(pred)
                 # same NULL-safe survivor rule as expire(): NULL retains
                 winners = winners.where(~F.coalesce(pred, F.lit(False)))
             # staged write + bucket-dir swap: one job, no pre-write
@@ -415,71 +400,3 @@ def write_bucketed(
     if sort_cols:
         w = w.sortBy(*sort_cols)
     w.saveAsTable(table)
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    partition_cols: Sequence[str] = (),
-    target_bytes: int = 128 << 20,
-) -> dict[str, int]:
-    """Small-file compaction (the OPTIMIZE-style maintenance pass a 100 TB
-    lake table needs: streaming micro-batches and per-day overwrites leave
-    thousands of KB-sized files whose per-file open/footer cost dominates
-    scans).  One distributed pass, no driver loop over partitions: a
-    REBALANCE hint with the advisory partition size set to ``target_bytes``
-    lets AQE coalesce small shuffle blocks (and split skewed ones) so output
-    files land near the target — per partition when ``partition_cols`` keys
-    the rebalance.  The rewrite goes to a sibling directory and is swapped
-    in atomically-for-readers-on-rename filesystems; on object stores the
-    swap step is a table-pointer/manifest update instead (or a txn format's
-    commit), the compaction pass itself is unchanged.
-
-    Returns {"files_before": n, "files_after": m}.
-    """
-    import glob
-    import os
-    import shutil
-
-    def _count(p: str) -> int:
-        return sum(
-            1
-            for f in glob.glob(os.path.join(p, "**", "*"), recursive=True)
-            if os.path.isfile(f) and not os.path.basename(f).startswith(("_", "."))
-        )
-
-    before = _count(path)
-    df = spark.read.parquet(path)
-    conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, str(target_bytes))
-    try:
-        out = df.hint("rebalance", *partition_cols) if partition_cols else df.hint("rebalance")
-        tmp = path.rstrip("/") + "__compacting"
-        swap = path.rstrip("/") + "__old"
-        # a previous run that crashed mid-swap can leave either scratch
-        # directory behind; os.rename onto a non-empty dir would then fail
-        # every subsequent compaction, so clear them up-front (the write
-        # below regenerates __compacting; __old is a fully-superseded copy)
-        for stale in (tmp, swap):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
-        writer = out.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*list(partition_cols))
-        writer.parquet(tmp)
-        os.rename(path, swap)
-        try:
-            os.rename(tmp, path)
-        except BaseException:
-            # restore the original table if the swap-in fails — readers
-            # must never be left with the table missing
-            os.rename(swap, path)
-            raise
-        shutil.rmtree(swap)
-    finally:
-        if prev is not None:
-            spark.conf.set(conf, prev)
-        else:
-            spark.conf.unset(conf)
-    return {"files_before": before, "files_after": _count(path)}

@@ -14,10 +14,10 @@ small JSON file naming the version's exact data-file set — so:
   before the link leaves orphan data files but a fully consistent table.
 - **time travel**: old manifests are never touched; ``read(version=N)``
   reconstructs any committed state exactly.
-- **safe compaction**: ``commit_rewrite`` publishes the same rows as new
-  files in a new manifest; in-flight readers of version N keep their file
-  list and are undisturbed (contrast ``compact_small_files``'s rename swap,
-  which this supersedes for tables that opt in).
+- **safe compaction**: ``commit_rewrite`` and ``commit_compact_small``/
+  ``maybe_compact`` publish the same rows as new files in a new manifest;
+  in-flight readers of version N keep their file list and are undisturbed
+  — no reader ever sees the table missing between two renames.
 
 Scale: the manifest holds file PATHS plus per-file metadata — at 100 TB
 that is O(files), kilobytes per commit, and readers schedule exactly the
@@ -111,8 +111,10 @@ class SnapshotTable:
         self.data_dir = os.path.join(self.path, "data")
         self.delete_dir = os.path.join(self.path, "_deletes")
         self.manifest_dir = os.path.join(self.path, "_manifests")
+        self.refs_dir = os.path.join(self.path, "_refs")
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.manifest_dir, exist_ok=True)
+        os.makedirs(self.refs_dir, exist_ok=True)
 
     # -- metadata ----------------------------------------------------------
     def versions(self) -> list[int]:
@@ -422,10 +424,11 @@ class SnapshotTable:
         """``layout`` (the table's DECLARED partition keys) and ``evolved``
         (partition evolution was explicitly declared at some point) are
         manifest state: passed explicitly by the verb that changes them,
-        propagated from the parent manifest otherwise.  The layout guard
-        reads these rather than inferring from the file mixture — MoR
-        verbs land flat files on partitioned parents as a matter of
-        format, which must NOT silently disarm the guard.
+        propagated from the parent manifest otherwise, so every manifest
+        declares ``layout`` (flat when a first commit names none).  The
+        layout guard reads these rather than inferring from the file
+        mixture — MoR verbs land flat files on partitioned parents as a
+        matter of format, which must NOT silently disarm the guard.
 
         ``partition_types`` records the COMMITTED logical type (Spark DDL)
         of every path-encoded partition column.  Hive layout stores those
@@ -446,9 +449,8 @@ class SnapshotTable:
         parent_m = self._manifest(versions[-1]) if versions else {}
         v = (versions[-1] + 1) if versions else 1
         manifest = {"version": v, "parent": versions[-1] if versions else None}
-        lay = layout if layout is not None else parent_m.get("layout")
-        if lay is not None:
-            manifest["layout"] = lay
+        lay = layout if layout is not None else parent_m.get("layout", [])
+        manifest["layout"] = lay
         ev = evolved if evolved is not None else parent_m.get("evolved")
         if ev:
             manifest["evolved"] = True
@@ -648,16 +650,11 @@ class SnapshotTable:
             raise ValueError(f"clone destination {dst.path} already has commits")
         head = self._head()
         m = self._manifest(head)
-        lay = m.get("layout")
-        ev = bool(m.get("evolved"))
-        if lay is None:  # legacy source manifest: infer, don't declare flat
-            lay, mixed = self._infer_layout(m["files"])
-            ev = ev or mixed
         dst._publish(
             list(m["files"]),
             delete_files=list(m.get("delete_files", [])) or None,
-            layout=lay,
-            evolved=ev,
+            layout=m["layout"],
+            evolved=bool(m.get("evolved")),
             constraints=m.get("constraints", {}),
             column_map=m.get("column_map", {}),
             generated=m.get("generated_columns", {}),
@@ -1031,20 +1028,12 @@ class SnapshotTable:
         update files on partitioned parents as a matter of format, and
         that must not silently disarm the guard for later appends.  Once
         evolution IS declared, the guard stands down for good (readers
-        group the layout generations).  Manifests from before these fields
-        existed fall back to inferring from the entries."""
+        group the layout generations)."""
         if not parent_entries:
             return
         if parent_manifest.get("evolved"):
             return  # declared evolution: mixed layouts are the contract
-        declared = parent_manifest.get("layout")
-        if declared is None:
-            keys = {
-                tuple(sorted(e.get("partitions", {}))) for e in parent_entries
-            }
-            if len(keys) > 1:
-                return  # legacy manifest, already mixed: nothing to defend
-            declared = list(next(iter(keys)))
+        declared = parent_manifest["layout"]
         new_keys = sorted(partition_by) if partition_by else []
         if list(declared) != new_keys:
             raise ValueError(
@@ -1604,9 +1593,7 @@ class SnapshotTable:
         no parquet footer is opened here — Iceberg manifests carry these
         counts precisely so a 100 TB maintenance planner picking OPTIMIZE
         bins (file sizes) and DV-fold candidates (dead-row ratios) never
-        opens a million footers.  Entries committed before the counts were
-        recorded are backfilled lazily from their footer (one metadata
-        read, old sandbox tables only — never a data pass)."""
+        opens a million footers."""
         import pyarrow.parquet as pq
 
         from urllib.parse import unquote, urlparse
@@ -1624,18 +1611,14 @@ class SnapshotTable:
                 dead[p] = dead.get(p, 0) + 1
         rows = []
         for e in m["files"]:
-            n_rows, nbytes = e.get("n_rows"), e.get("bytes")
-            if n_rows is None or nbytes is None:  # pre-r10 manifest entry
-                n_rows = pq.ParquetFile(e["path"]).metadata.num_rows
-                nbytes = os.path.getsize(e["path"])
             parts = e.get("partitions")
             rows.append(
                 (
                     v,
                     e["path"],
                     json.dumps(parts, sort_keys=True) if parts else None,
-                    n_rows,
-                    nbytes,
+                    e["n_rows"],
+                    e["bytes"],
                     dead.get(e["path"], 0),
                     json.dumps(e["stats"], sort_keys=True) if e.get("stats") else None,
                 )
@@ -1664,9 +1647,17 @@ class SnapshotTable:
         )
 
     # -- refs: immutable named tags (Iceberg table-refs parity) ---------------
-    @property
-    def _refs_path(self) -> str:
-        return os.path.join(self.path, "_refs.json")
+    def _tag_path(self, name: str) -> str:
+        """One file per tag, named by the tag: a single path segment, and a
+        leading ``.`` is reserved for temp files (which ``tags()`` skips)."""
+        if not name or os.sep in name or name.startswith("."):
+            raise ValueError(f"invalid tag name {name!r}: empty, nested or dot-led")
+        return os.path.join(self.refs_dir, name)
+
+    @staticmethod
+    def _read_tag(path: str) -> int:
+        with open(path) as f:
+            return int(f.read())
 
     def tags(self) -> dict[str, int]:
         """Named refs: tag name -> pinned version.  Tags are IMMUTABLE
@@ -1675,17 +1666,24 @@ class SnapshotTable:
         and every later read of that name sees bit-identical data no
         matter how the table mutates, because :meth:`vacuum` never
         expires a tagged version."""
-        try:
-            with open(self._refs_path) as f:
-                return {k: int(v) for k, v in json.load(f)["tags"].items()}
-        except FileNotFoundError:
-            return {}
+        out = {}
+        for name in os.listdir(self.refs_dir):
+            if name.startswith("."):
+                continue
+            # a concurrent delete_tag may unlink it between list and open
+            with contextlib.suppress(FileNotFoundError):
+                out[name] = self._read_tag(os.path.join(self.refs_dir, name))
+        return out
 
     def tag(self, name: str, version: int | None = None) -> int:
         """Create tag ``name`` at ``version`` (default: current head).
-        Refusals: unborn table, unknown/expired version, existing name
-        (tags are immutable — ``delete_tag`` first).  Atomic tmp+replace,
-        like every metadata write here."""
+        Refusals: invalid name, unborn table, unknown/expired version,
+        existing name (tags are immutable — ``delete_tag`` first).
+
+        Each tag is its own file under ``_refs/``, linked from a private
+        temp file: link refuses an existing target, so immutability is a
+        filesystem fact and of writers racing on one name exactly one wins."""
+        path = self._tag_path(name)
         versions = self.versions()
         if not versions:
             raise ValueError(f"snapshot table {self.path} has no commits to tag")
@@ -1694,29 +1692,27 @@ class SnapshotTable:
             raise ValueError(
                 f"cannot tag: version {v} does not exist (or was vacuumed)"
             )
-        cur = self.tags()
-        if name in cur:
+        tmp = os.path.join(self.refs_dir, f".{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "w") as f:
+                f.write(str(v))
+            os.link(tmp, path)
+        except FileExistsError:
             raise ValueError(
-                f"tag {name!r} already points at v{cur[name]}; tags are "
-                f"immutable — delete_tag it first"
-            )
-        cur[name] = v
-        tmp = self._refs_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"tags": cur}, f)
-        os.replace(tmp, self._refs_path)
+                f"tag {name!r} already points at v{self._read_tag(path)}; tags "
+                f"are immutable — delete_tag it first"
+            ) from None
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(tmp)
         return v
 
     def delete_tag(self, name: str) -> None:
         """Drop a tag; the version it pinned becomes vacuum-eligible."""
-        cur = self.tags()
-        if name not in cur:
-            raise ValueError(f"no tag {name!r} on snapshot table {self.path}")
-        del cur[name]
-        tmp = self._refs_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"tags": cur}, f)
-        os.replace(tmp, self._refs_path)
+        try:
+            os.unlink(self._tag_path(name))
+        except FileNotFoundError:
+            raise ValueError(f"no tag {name!r} on snapshot table {self.path}") from None
 
     def resolve_tag(self, name: str) -> int:
         """Tag name -> version, for ``read(spark, t.resolve_tag(name))``,
@@ -1923,8 +1919,8 @@ class SnapshotTable:
             dvs = None
             # first-commit append or rewrite: the staged entries DEFINE the
             # table's layout — declare it explicitly (mirrors commit_append's
-            # first commit / commit_rewrite), otherwise the table would rely
-            # on the legacy entry-inference fallback forever
+            # first commit / commit_rewrite): every manifest carries
+            # ``layout`` and no verb infers it from the entries
             keys = {tuple(sorted(e.get("partitions", {}))) for e in entries}
             lay = list(next(iter(keys))) if len(keys) == 1 else []
             # a rewrite re-declares the layout wholesale and clears any
@@ -1987,17 +1983,6 @@ class SnapshotTable:
             pq.ParquetFile(e["path"]).metadata.num_rows for e in m["files"]
         )
         return dead / total if total else 0.0
-
-    @staticmethod
-    def _infer_layout(entries: list[dict]) -> tuple[list[str], bool]:
-        """Legacy-manifest layout inference (shared by every verb that
-        needs a declared layout from a pre-layout-field manifest):
-        single partition-key tuple -> that layout; mixed tuples -> flat
-        with evolution declared (mixing is the observed contract)."""
-        keys = {tuple(sorted(e.get("partitions", {}))) for e in entries}
-        if len(keys) == 1:
-            return list(next(iter(keys))), False
-        return [], True
 
     def _trim_dvs(
         self, spark: SparkSession, dvs: list[str], kept: list[dict]
@@ -2302,11 +2287,8 @@ class SnapshotTable:
         cur = self._manifest(versions[-1])
         cur_entries = cur["files"]
         dvs = list(cur.get("delete_files", []))
-        # the table's declared layout decides where the update rows land;
-        # legacy manifests fall back to the entry-inferred single layout
-        lay = cur.get("layout")
-        if lay is None:
-            lay, _mixed = self._infer_layout(cur_entries)
+        # the table's declared layout decides where the update rows land
+        lay = cur["layout"]
         if lay and not set(lay) <= set(updates.columns):
             raise ValueError(
                 f"commit_merge updates must carry the table's partition "
@@ -2520,22 +2502,13 @@ class SnapshotTable:
                 f"cannot restore v{version}: {len(missing)} file(s) vacuumed away"
             )
         # a restore re-declares the RESTORED version's layout state, not
-        # the abandoned head's.  Manifests from before the layout field
-        # existed fall back to inferring it from the restored entries'
-        # partition keys (the same fallback _check_layout uses) — hard-
-        # declaring [] would spuriously arm the guard against appends that
-        # correctly match the files' actual partition layout.
-        lay = m.get("layout")
-        ev = bool(m.get("evolved"))
-        if lay is None:
-            lay, mixed = self._infer_layout(entries)
-            ev = ev or mixed  # legacy mixed layout: evolution is a fact
+        # the abandoned head's
         return self._publish(
             list(entries),
             expected_parent=head,
             delete_files=list(dvs) or None,
-            layout=lay,
-            evolved=ev,
+            layout=m["layout"],
+            evolved=bool(m.get("evolved")),
             # ... and the restored version's column mapping + constraints
             # (explicit empty = clear, never inherit the abandoned head's)
             column_map=m.get("column_map", {}),

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from bigdata_homed_spark.sources.jdbc import (
     jdbc_partitioned_options,
     jdbc_subquery_options,
@@ -480,78 +482,6 @@ def test_state_store_snapshot_retention_policy(spark, tmp_path):
     assert len(hourly) == 23
 
 
-def test_compact_small_files_reduces_count_preserves_data(spark, sf_dir, tmp_path):
-    from bigdata_homed_spark.sources.sinks import compact_small_files
-    from bigdata_homed_spark.sources.tables import load_table
-    import pyspark.sql.functions as F
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
-    p = str(tmp_path / "frag")
-    # simulate a micro-batch-fragmented table: 64 tiny files
-    ev.repartition(64).write.parquet(p)
-    want_rows = ev.count()
-    want_sum = ev.agg(F.sum("event_id")).collect()[0][0]
-
-    stats = compact_small_files(spark, p, target_bytes=64 << 20)
-    assert stats["files_before"] >= 64
-    assert stats["files_after"] < stats["files_before"] // 4
-
-    got = spark.read.parquet(p)
-    assert got.count() == want_rows
-    assert got.agg(F.sum("event_id")).collect()[0][0] == want_sum
-
-
-def test_compact_small_files_keeps_partition_dirs(spark, sf_dir, tmp_path):
-    from bigdata_homed_spark.sources.sinks import compact_small_files
-    from bigdata_homed_spark.sources.tables import load_table
-    import pyspark.sql.functions as F
-    import glob, os
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", (F.col("user_id") % 3).alias("part")
-    )
-    p = str(tmp_path / "fragp")
-    ev.repartition(16).write.partitionBy("part").parquet(p)
-    stats = compact_small_files(spark, p, partition_cols=["part"], target_bytes=64 << 20)
-    assert stats["files_after"] < stats["files_before"]
-    # partition layout survives (pruning still works)
-    assert sorted(
-        os.path.basename(d) for d in glob.glob(os.path.join(p, "part=*"))
-    ) == ["part=0", "part=1", "part=2"]
-    got = spark.read.parquet(p).where(F.col("part") == 1)
-    assert got.count() == ev.where(F.col("part") == 1).count()
-
-
-def test_compact_small_files_recovers_from_stale_swap_dirs(spark, sf_dir, tmp_path):
-    """r5-advice regression: a crash between the two swap renames (or a
-    killed previous run) leaves `__old` / `__compacting` behind; the next
-    compaction must clear them and succeed instead of failing os.rename
-    onto a non-empty directory."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from bigdata_homed_spark.sources.sinks import compact_small_files
-    from bigdata_homed_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
-    p = str(tmp_path / "frag")
-    ev.repartition(16).write.parquet(p)
-    want_rows = ev.count()
-
-    # plant both stale scratch dirs, non-empty, as a crashed run would
-    for stale in (p + "__old", p + "__compacting"):
-        os.makedirs(stale)
-        with open(os.path.join(stale, "leftover.parquet"), "w") as f:
-            f.write("junk")
-
-    stats = compact_small_files(spark, p, target_bytes=64 << 20)
-    assert stats["files_after"] < stats["files_before"]
-    assert not os.path.exists(p + "__old")
-    assert not os.path.exists(p + "__compacting")
-    assert spark.read.parquet(p).count() == want_rows
-
-
 def test_merge_latest_tombstone_not_resurrected(spark, tmp_path):
     """CDC contract (stream_cdc_apply): a delete tombstone is merged STATE,
     so an older upsert replayed after the delete loses to it, and the
@@ -622,8 +552,9 @@ def test_snapshot_table_time_travel_and_atomicity(spark, tmp_path):
 def test_snapshot_table_compaction_preserves_readers(spark, tmp_path):
     """commit_rewrite publishes the same rows under a new manifest without
     touching the parent version's files — an in-flight reader of v1 keeps
-    a valid file list (the compact_small_files rename-swap hazard is
-    structurally impossible here)."""
+    a valid file list (a directory rename swap, which leaves readers
+    without a table between its two renames, is structurally impossible
+    here)."""
     import os
 
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
@@ -850,6 +781,19 @@ def test_snapshot_restore_is_forward_commit(spark, tmp_path):
     except (ValueError, FileNotFoundError):
         pass
 
+    # a partitioned table: restore re-declares the restored version's
+    # layout, so the guard accepts a layout-matching append afterwards
+    from pyspark.sql import functions as F
+
+    df = spark.range(20).select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
+    tp = SnapshotTable(str(tmp_path / "prestore"))
+    tp.commit_append(df, partition_by=["p"])
+    tp.commit_append(df.select((F.col("k") + 100).alias("k"), "p"), partition_by=["p"])
+    v3 = tp.restore(1)
+    assert tp._manifest(v3)["layout"] == ["p"]
+    tp.commit_append(df.select((F.col("k") + 200).alias("k"), "p"), partition_by=["p"])
+    assert tp.read(spark).count() == 40
+
 
 def test_snapshot_schema_evolution_merge_read(spark, tmp_path):
     """Additive evolution: a later commit carries an extra column; a
@@ -1000,6 +944,94 @@ def test_snapshot_publish_race_has_one_winner(tmp_path):
         assert v == 1
         assert SnapshotTable(path).files(1) == [f"w{winner}.parquet"]
         assert os.listdir(writers[0].manifest_dir) == ["v1.json"]
+
+
+def _run_threads(target, n, timeout=60):
+    import threading
+
+    threads = [threading.Thread(target=target, args=(i,)) for i in range(n)]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout)
+    assert not any(th.is_alive() for th in threads)
+
+
+def test_snapshot_concurrent_tags_all_land(tmp_path):
+    """Two threads each create 100 distinct tags on one table, 10 trials:
+    every tag lands and no call raises.  With one shared refs file
+    rewritten through one shared temp name, calls raised on the consumed
+    temp file and concurrent rewrites lost tags or left the refs file
+    unparseable (breaking tags(), resolve_tag and vacuum)."""
+    import sys
+    import threading
+
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for trial in range(10):
+            path = str(tmp_path / f"tags{trial}")
+            SnapshotTable(path)._publish([{"path": "x.parquet"}])
+            tables = [SnapshotTable(path), SnapshotTable(path)]
+            start = threading.Barrier(2)
+            errors = []
+
+            def tag_many(i):
+                start.wait()
+                for j in range(100):
+                    try:
+                        tables[i].tag(f"w{i}-{j}")
+                    except Exception as e:  # noqa: BLE001 - any raise fails below
+                        errors.append(repr(e))
+
+            _run_threads(tag_many, 2)
+            assert not errors, (trial, errors[:3])
+            got = SnapshotTable(path).tags()
+            assert got == {f"w{i}-{j}": 1 for i in range(2) for j in range(100)}
+    finally:
+        sys.setswitchinterval(old)
+
+
+def test_snapshot_same_tag_race_has_one_winner(tmp_path):
+    """Four writers race to create the SAME tag name at different
+    versions: exactly one wins, the others get the immutability ValueError
+    naming the winner's version, and the tag keeps the winner's version.
+    A check-then-replace lets several writers each see the name free and
+    all report success, the last replace silently moving the tag."""
+    import sys
+    import threading
+
+    from bigdata_homed_spark.sources.snapshots import SnapshotTable
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for trial in range(100):
+            path = str(tmp_path / f"same{trial}")
+            for k in range(4):
+                SnapshotTable(path)._publish([{"path": f"f{k}.parquet"}])
+            tables = [SnapshotTable(path) for _ in range(4)]
+            start = threading.Barrier(4)
+            won, lost, errors = [], [], []
+
+            def tag_one(i):
+                start.wait()
+                try:
+                    won.append(tables[i].tag("release", i + 1))
+                except ValueError as e:
+                    lost.append(str(e))
+                except Exception as e:  # noqa: BLE001 - any other outcome fails below
+                    errors.append(repr(e))
+
+            _run_threads(tag_one, 4)
+            assert not errors, (trial, errors)
+            assert len(won) == 1 and len(lost) == 3, (trial, won, lost)
+            assert f"already points at v{won[0]}" in lost[0]
+            assert SnapshotTable(path).tags() == {"release": won[0]}
+    finally:
+        sys.setswitchinterval(old)
 
 
 def test_snapshot_incremental_read_append_only_contract(spark, tmp_path):
@@ -2349,39 +2381,50 @@ def test_wap_first_commit_declares_layout(spark, tmp_path):
     assert m2["layout"] == [] and not m2.get("evolved")
 
 
-def test_restore_infers_layout_on_legacy_manifest(spark, tmp_path):
-    """restore() of a version whose manifest predates the layout field
-    infers the layout from the restored entries' partition keys — it must
-    NOT hard-declare flat, which would spuriously reject a correct
-    partitioned append afterwards."""
-    import json
+@pytest.mark.parametrize("partition_by", [None, ["p"]])
+def test_every_verb_declares_layout_and_file_counts(spark, tmp_path, partition_by):
+    """No verb infers the layout from the file entries, so every version
+    every verb publishes must declare ``layout`` in its stored manifest,
+    and every file entry must carry the ``n_rows``/``bytes`` counts that
+    files_table reads without opening a footer.  Run on a partitioned and
+    on a flat table."""
     import os
 
     from pyspark.sql import functions as F
 
     from bigdata_homed_spark.sources.snapshots import SnapshotTable
 
-    df = spark.range(20).select(
-        F.col("id").alias("k"), (F.col("id") % 2).alias("p")
+    def rows(lo, hi, dv=0):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 2).alias("p"),
+            (F.col("id") + dv).alias("v"),
+        )
+
+    def check(t):
+        for v in t.versions():
+            assert t._raw_manifest(v)["layout"] == (partition_by or []), (t.path, v)
+            for e in t._manifest(v)["files"]:
+                assert e["n_rows"] >= 0, (t.path, v, e)
+                assert e["bytes"] == os.path.getsize(e["path"]), (t.path, v, e)
+
+    t = SnapshotTable(str(tmp_path / "verbs"))
+    t.publish_staged(t.stage_commit(rows(0, 40), partition_by=partition_by))
+    t.commit_append(rows(40, 60), partition_by=partition_by)
+    t.commit_merge(rows(0, 5, dv=1000), key="k")
+    t.commit_merge_on_read(rows(5, 10, dv=1000), key="k")
+    t.commit_delete(spark, "k >= 55")
+    t.commit_update(spark, "k < 3", {"v": F.col("v") + 1})
+    t.commit_compact_small(spark, threshold_bytes=1 << 30)
+    t.commit_rewrite(t.read(spark), partition_by=partition_by)
+    t.restore(2)
+    t.publish_staged(
+        t.stage_commit(rows(60, 70), partition_by=partition_by), spark
     )
-    t = SnapshotTable(str(tmp_path / "legacyrestore"))
-    t.commit_append(df, partition_by=["p"])
-    t.commit_append(
-        df.select((F.col("k") + 100).alias("k"), "p"), partition_by=["p"]
-    )
-    # simulate a legacy v1 manifest: strip the layout field
-    p1 = os.path.join(t.manifest_dir, "v1.json")
-    m1 = json.load(open(p1))
-    m1.pop("layout", None)
-    with open(p1, "w") as f:
-        json.dump(m1, f)
-    v3 = t.restore(1)
-    assert t._manifest(v3)["layout"] == ["p"]
-    # the guard now accepts a layout-matching append post-restore
-    t.commit_append(
-        df.select((F.col("k") + 200).alias("k"), "p"), partition_by=["p"]
-    )
-    assert t.read(spark).count() == 40
+    assert t.versions() == list(range(1, 11))
+    assert t.read(spark).count() == 70
+    check(t)
+    check(t.clone_to(str(tmp_path / "verbs_clone")))
 
 
 def test_manifest_checkpointing_bounds_commit_write(spark, tmp_path):
@@ -2659,6 +2702,12 @@ def test_snapshot_shallow_clone(spark, tmp_path):
         clone.commit_append(
             spark.createDataFrame([(5000, 2, -1.0)], "k long, day long, val double")
         )
+    # the declared layout came along: a layout-matching append is accepted
+    clone.commit_append(
+        spark.createDataFrame([(901, 2, 1.0)], "k long, day long, val double"),
+        partition_by=["day"],
+    )
+    assert clone.read(spark).count() == 92
 
     # clone vacuum sweeps only its own tree
     clone.commit_rewrite(clone.read(spark), n_files=1)
@@ -2830,33 +2879,6 @@ def test_column_mapping_review_fixes(spark, tmp_path):
     # and a LOGICAL probe prunes through the mapping
     assert t4.read_pruned(spark, "amount", 0, 5).count() == 30  # superset read ok
     assert len(t4.pruned_entries(col="amount", lo=0, hi=5)) == 1
-
-
-def test_shallow_clone_legacy_layout_inference(spark, tmp_path):
-    """clone_to of a LEGACY partitioned manifest (no layout field) infers
-    the layout from the entries instead of hard-declaring flat — the
-    clone accepts a matching partitioned append."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from bigdata_homed_spark.sources.snapshots import SnapshotTable
-
-    src = SnapshotTable(str(tmp_path / "legsrc"))
-    df = spark.range(20).select(F.col("id").alias("k"), (F.col("id") % 2).alias("p"))
-    src.commit_append(df, partition_by=["p"])
-    p1 = os.path.join(src.manifest_dir, "v1.json")
-    m1 = json.load(open(p1))
-    m1.pop("layout", None)  # simulate a pre-layout-field manifest
-    with open(p1, "w") as f:
-        json.dump(m1, f)
-    clone = src.clone_to(str(tmp_path / "legclone"))
-    assert clone._manifest(1)["layout"] == ["p"]
-    clone.commit_append(
-        df.select((F.col("k") + 100).alias("k"), "p"), partition_by=["p"]
-    )
-    assert clone.read(spark).count() == 40
 
 
 def test_partition_type_fidelity_evolve_rewrite_append(spark, tmp_path):
@@ -3185,8 +3207,7 @@ def test_files_table_pure_manifest_read(spark, tmp_path, monkeypatch):
     """The r10 contract: commit-time row/byte stats make files_table a
     PURE manifest read — no parquet footer is opened for entries that
     carry them (Iceberg-manifest parity: a 100 TB planner never opens
-    O(files) footers).  Entries from pre-r10 manifests (stats stripped
-    here by hand) backfill lazily from their footer and still agree."""
+    O(files) footers)."""
     import os
 
     import pyarrow.parquet as pq
@@ -3215,22 +3236,6 @@ def test_files_table_pure_manifest_read(spark, tmp_path, monkeypatch):
     assert sum(r["n_rows"] for r in f) == 20
     assert all(r["bytes"] == os.path.getsize(r["path"]) for r in f)
 
-    # legacy-manifest backfill: strip the recorded stats and re-read
-    import json as _json
-
-    vpath = os.path.join(t.path, "_manifests", f"v{t.versions()[-1]}.json")
-    raw = _json.load(open(vpath))
-    for e in raw.get("files", []):
-        e.pop("n_rows", None)
-        e.pop("bytes", None)
-    with open(vpath, "w") as fh:
-        _json.dump(raw, fh)
-    t2 = SnapshotTable(t.path)  # fresh instance: no manifest cache
-    f2 = t2.files_table(spark).collect()
-    assert sum(r["n_rows"] for r in f2) == 20
-    assert {(r["path"], r["n_rows"], r["bytes"]) for r in f2} == {
-        (r["path"], r["n_rows"], r["bytes"]) for r in f
-    }
 
 
 def test_files_table_dv_paths_percent_encoded_dir(spark, tmp_path):
@@ -3417,6 +3422,10 @@ def test_snapshot_tags_pin_versions_and_survive_vacuum(spark, tmp_path):
         t.tag("train-v1", 2)
     with pytest.raises(ValueError, match="does not exist"):
         t.tag("nope", 99)
+    # a tag is one file named by the tag: no empty, nested or hidden names
+    for bad in ("", "a/b", ".hidden"):
+        with pytest.raises(ValueError, match="invalid tag name"):
+            t.tag(bad)
     # v1 pinned read BEFORE vacuum
     assert t.read(spark, t.resolve_tag("train-v1")).count() == 10
     res = t.vacuum(keep_last=1)
